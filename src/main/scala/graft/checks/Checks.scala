@@ -427,9 +427,12 @@ sealed trait ConstraintCheck {
 }
 
 /** A check whose error path is a row-local violation-struct array. Such
-  * checks are FUSABLE: [[graft.engine.Pipeline.violations]] concatenates the
-  * arrays of all row-local checks into one projection and explodes once —
-  * all subject-local validation in a single scan of the table.
+  * checks are FUSABLE: [[graft.engine.Pipeline.violations]] compiles all of
+  * them into ONE native expression ([[graft.functions.ValidateSpans]])
+  * evaluated in the composed pass's shared scan — all subject-local
+  * validation in a single scan of the table. `violArray` is the HOF
+  * reference form, exploded by this check's own plan ([[run]]), which the
+  * golden specs compare the composed pass against.
   */
 trait RowLocalCheck extends ConstraintCheck {
   /** `array<struct<checkId,kind,value,expected>>` of this row's violations. */

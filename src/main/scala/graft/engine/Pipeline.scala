@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.checks.{CheckContext, Checks, ConstraintCheck, RowLocalCheck}
 import graft.model.SchemaDef
@@ -31,123 +31,80 @@ object Pipeline {
 
   /** Run the given checks; returns the union of violation rows.
     * Dataset-level violations (no docId) come out with docId null.
-    *
-    * When `fused` (default), all [[graft.checks.RowLocalCheck]]s evaluate in
-    * ONE shared scan: their per-row violation arrays concatenate into a
-    * single projection exploded once — subject-local validation of the whole
-    * constraint set costs one pass over the table regardless of how many
-    * checks are configured (the reference made 1-3 HTTP queries per
-    * property/restriction). Non-row-local checks (vocabulary distincts,
-    * referential joins) keep their own minimal-ReadSchema scans.
+    * The first element of [[violationsWithCore]].
     */
   def violations(spark: SparkSession, docs: DataFrame, schema: SchemaDef,
                  checks: Seq[ConstraintCheck] = Checks.all,
-                 fused: Boolean = true,
-                 native: Boolean = true,
-                 universe: Option[DataFrame] = None): DataFrame = {
-    val ctx0 = CheckContext(spark, docs, schema, universe)
-    val (rowLocal, others) = checks.partition(c => fused && c.isInstanceOf[RowLocalCheck])
+                 universe: Option[DataFrame] = None): DataFrame =
+    violationsWithCore(spark, docs, schema, checks, universe)._1
 
-    // Shared single-scan mode (round-9, guide §2.4/§8): in the fused native
-    // path, ONE wide corpus scan computes the violation array AND every
-    // per-doc projection the corpus checks consume (kinds, type-classes,
-    // refs, class), localCheckpoint-materialized; every subplan then reads
-    // that doc-metadata-sized frame instead of re-scanning the corpus
-    // (measured: the composed pass ran ~7 corpus scans summing to ~10 s at
-    // 800k docs — the scans, not the operators, dominated). Identical rows
-    // by construction: every derived projection uses the same expressions
-    // as the per-check forms (PipelineGoldenSpec three-way equality).
-    // Opt out via spark.graft.validate.sharedScan=false.
-    val useShared = rowLocal.nonEmpty && native &&
-      spark.conf.getOption("spark.graft.validate.sharedScan").forall(_ != "false")
-
-    if (useShared) {
-      val cc = compiledFor(ctx0, rowLocal, schema)
-      val shared = ctx0.buildSharedScan(Seq(
-        graft.functions.ValidateSpans.validateSpans(col("spans"), cc).as("__viols")))
-      val ctx = ctx0.copy(sharedOpt = Some(shared))
-      val core = shared.select(col("doc_id"), explode(col("__viols")).as("v"))
-        .select(col("v.checkId").as("checkId"), lit("error").as("severity"),
-          col("doc_id").cast("string").as("docId"), col("v.kind").as("kind"),
-          col("v.value").as("value"), col("v.expected").as("expected"),
-          col("v.check").as("check"))
-      val extras = rowLocal.flatMap(c =>
-        c.asInstanceOf[RowLocalCheck].extraFrames(ctx)
-          .map(_.withColumn("check", lit(c.id))))
-      val otherFrames = others.map(c => c.run(ctx).withColumn("check", lit(c.id)))
-      // the union's partition count is the SUM over ~20 branches (~350
-      // partitions of a small frame): every downstream action — the count,
-      // a cache build, the verdict rollup — pays one task per partition in
-      // pure scheduling. A narrow coalesce bounds it at session
-      // parallelism; branch work below the exchanges is unaffected.
-      ((core +: extras) ++ otherFrames).reduce(_ unionByName _)
-        .coalesce(spark.sparkContext.defaultParallelism)
-    } else {
-      val fusedFrames: Seq[DataFrame] =
-        if (rowLocal.isEmpty) Nil
-        else {
-          val one = fusedCoreFrame(ctx0, rowLocal, native, docs, schema)
-          val extras = rowLocal.flatMap(c =>
-            c.asInstanceOf[RowLocalCheck].extraFrames(ctx0)
-              .map(_.withColumn("check", lit(c.id))))
-          one +: extras
-        }
-      val otherFrames = others.map(c => c.run(ctx0).withColumn("check", lit(c.id)))
-      (fusedFrames ++ otherFrames).reduce(_ unionByName _)
-    }
+  /** The composed validation pass: `(violations, core)` from ONE shared
+    * corpus scan. That scan ([[CheckContext.buildSharedScan]]) computes
+    * the native [[graft.functions.ValidateSpans]] violation array of every
+    * [[graft.checks.RowLocalCheck]] (subject-local validation of the whole
+    * constraint set in one pass, however many checks are configured — the
+    * reference made 1-3 HTTP queries per property/restriction) AND every
+    * per-doc projection the corpus checks consume (kinds, type-classes,
+    * refs, class), as a cached frame that every subplan reads instead of
+    * re-scanning the corpus (measured: ~7 corpus scans summing to ~10 s at
+    * 800k docs when each subplan scanned for itself).
+    *
+    * `core` is that frame's exploded violation array — the [[rowLocalCore]]
+    * rows, read from the cache, so persisting it beside the violations
+    * costs no second corpus scan. `universe` is the referential target
+    * universe when `docs` is a filtered subset (a resumed run).
+    */
+  def violationsWithCore(spark: SparkSession, docs: DataFrame, schema: SchemaDef,
+                         checks: Seq[ConstraintCheck] = Checks.all,
+                         universe: Option[DataFrame] = None): (DataFrame, DataFrame) = {
+    val ctx = CheckContext(spark, docs, schema, universe)
+    val shared = ctx.buildSharedScan(Seq(nativeViolations(ctx, checks).as("__viols")))
+    val core = coreRows(shared, col("__viols"))
+    (assemble(spark, ctx.copy(sharedOpt = Some(shared)), core, checks), core)
   }
 
-  /** The compiled subject-local constraint set for a row-local check list —
-    * strictness and span layout resolved exactly as [[fusedCoreFrame]]'s
-    * native branch does.
+  /** The native row-local violation array for `checks`' row-local subset —
+    * strictness and the optional span-datatype layout flow in from the
+    * configured check and the corpus schema (the datatype seam).
     */
-  private def compiledFor(ctx: CheckContext, rowLocal: Seq[ConstraintCheck],
-                          schema: SchemaDef): graft.functions.CompiledConstraints = {
+  private def nativeViolations(ctx: CheckContext, checks: Seq[ConstraintCheck]): Column = {
+    val rowLocal = checks.filter(_.isInstanceOf[RowLocalCheck])
     val strictDt = rowLocal.exists {
       case c: graft.checks.CheckDatatypeImpl => c.strict
       case _ => false
     }
-    graft.functions.CompiledConstraints.from(
-      schema, rowLocal.map(_.id).toSet,
-      strictDt = strictDt,
-      spanArity = ctx.spanArity,
-      dtOrdinal = ctx.spanDatatypeOrd)
+    graft.functions.ValidateSpans.validateSpans(col("spans"),
+      graft.functions.CompiledConstraints.from(
+        ctx.schema, rowLocal.map(_.id).toSet,
+        strictDt = strictDt,
+        spanArity = ctx.spanArity,
+        dtOrdinal = ctx.spanDatatypeOrd))
   }
 
-  /** The fused row-local pass itself (no extras, no corpus checks) —
-    * extracted so [[violationsDelta]] can run it over the dirty slice
-    * alone. Its rows are PURE per-document functions of (spans, schema):
-    * exactly the property that makes digest-based carry-forward sound.
+  /** One violation row per element of the per-doc array `viols`. */
+  private def coreRows(df: DataFrame, viols: Column): DataFrame =
+    df.select(col("doc_id"), explode(viols).as("v"))
+      .select(col("v.checkId").as("checkId"), lit("error").as("severity"),
+        col("doc_id").cast("string").as("docId"), col("v.kind").as("kind"),
+        col("v.value").as("value"), col("v.expected").as("expected"),
+        col("v.check").as("check"))
+
+  /** core ∪ the row-local checks' extraFrames ∪ the corpus checks, all over
+    * `ctx` (shared mode). The union's partition count is the SUM over ~20
+    * branches (~350 partitions of a small frame): every downstream action —
+    * the count, a cache build, the verdict rollup — pays one task per
+    * partition in pure scheduling. A narrow coalesce bounds it at session
+    * parallelism; branch work below the exchanges is unaffected.
     */
-  private def fusedCoreFrame(ctx: CheckContext, rowLocal: Seq[ConstraintCheck],
-                             native: Boolean, docs: DataFrame,
-                             schema: SchemaDef): DataFrame = {
-        if (native) {
-            // the native single-pass expression: compiled validators,
-            // primitive counters, one output array — codegen'd end to end.
-            // Strictness and the optional span-datatype layout flow in from
-            // the configured check / the corpus schema (the datatype seam).
-            val cc = compiledFor(ctx, rowLocal, schema)
-            docs.select(col("doc_id"),
-              explode(graft.functions.ValidateSpans.validateSpans(col("spans"), cc)).as("v"))
-              .select(col("v.checkId").as("checkId"), lit("error").as("severity"),
-                col("doc_id").cast("string").as("docId"), col("v.kind").as("kind"),
-                col("v.value").as("value"), col("v.expected").as("expected"),
-                col("v.check").as("check"))
-          } else {
-            // HOF formulation (kept as the reference semantics oracle)
-            val tagged = rowLocal.map { c =>
-              transform(c.asInstanceOf[RowLocalCheck].violArray(ctx), v => struct(
-                v.getField("checkId").as("checkId"), v.getField("kind").as("kind"),
-                v.getField("value").as("value"), v.getField("expected").as("expected"),
-                lit(c.id).as("check")))
-            }
-            docs.select(col("doc_id"), explode(concat(tagged: _*)).as("v"))
-              .select(col("v.checkId").as("checkId"), lit("error").as("severity"),
-                col("doc_id").cast("string").as("docId"), col("v.kind").as("kind"),
-                col("v.value").as("value"), col("v.expected").as("expected"),
-                col("v.check").as("check"))
-          }
+  private def assemble(spark: SparkSession, ctx: CheckContext, core: DataFrame,
+                       checks: Seq[ConstraintCheck]): DataFrame = {
+    val (rowLocal, others) = checks.partition(_.isInstanceOf[RowLocalCheck])
+    val extras = rowLocal.flatMap(c =>
+      c.asInstanceOf[RowLocalCheck].extraFrames(ctx)
+        .map(_.withColumn("check", lit(c.id))))
+    val otherFrames = others.map(c => c.run(ctx).withColumn("check", lit(c.id)))
+    ((core +: extras) ++ otherFrames).reduce(_ unionByName _)
+      .coalesce(spark.sparkContext.defaultParallelism)
   }
 
   /** Canonical span-sequence digest: md5 of the offset-ordered
@@ -165,7 +122,7 @@ object Pipeline {
     * when unchanged. The sentinel starts with 0x03, so it can never
     * collide with an md5 hex digest (including the empty-array digest).
     */
-  def spanDigest(spans: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+  def spanDigest(spans: Column): Column = {
     val ordered = array_sort(spans, (l, r) =>
       when(l.getField("offset") < r.getField("offset"), -1)
         .when(l.getField("offset") > r.getField("offset"), 1)
@@ -211,33 +168,32 @@ object Pipeline {
         coalesce(col("__nc"), lit(0L)).as("__nc"))
   }
 
-  /** The PURELY-PER-DOC violation core: the fused row-local pass alone —
+  /** The PURELY-PER-DOC violation core: the native row-local pass alone —
     * no extraFrames (those join other documents' classes via the
     * ref→target resolution, or aggregate corpus-wide distincts) and no
-    * corpus checks. This is the carry-forward unit of [[violationsDelta]];
-    * persist it beside each snapshot's results.
+    * corpus checks. Its rows are pure functions of (spans, schema): the
+    * carry-forward unit of [[violationsDelta]]. A full run gets it from
+    * [[violationsWithCore]] at no extra scan; this standalone form scans
+    * `docs` itself (the delta's dirty slice, a stream).
     */
   def rowLocalCore(spark: SparkSession, docs: DataFrame, schema: SchemaDef,
-                   checks: Seq[ConstraintCheck] = Checks.all,
-                   native: Boolean = true): DataFrame = {
-    val ctx = CheckContext(spark, docs, schema, None)
-    val rowLocal = checks.filter(_.isInstanceOf[RowLocalCheck])
-    require(rowLocal.nonEmpty, "no row-local checks configured")
-    fusedCoreFrame(ctx, rowLocal, native, docs, schema)
+                   checks: Seq[ConstraintCheck] = Checks.all): DataFrame = {
+    require(checks.exists(_.isInstanceOf[RowLocalCheck]), "no row-local checks configured")
+    coreRows(docs, nativeViolations(CheckContext(spark, docs, schema), checks))
   }
 
   /** INCREMENTAL validation between snapshots (north rule: resumable from
-    * snapshot checkpoints): the expensive fused span-validation scan runs
+    * snapshot checkpoints): the expensive span-validation scan runs
     * over ONLY the added/changed documents; unchanged documents carry
-    * their prior row-local violations forward (sound because the fused
-    * pass is a pure function of (spans, schema) and [[snapshotDiff]]
-    * certifies spans unchanged); removed documents' rows drop. Everything
-    * that can SEE OTHER DOCUMENTS — vocabulary/class distincts, the
-    * referential existence join, DocIdUnique, and the row-local checks'
-    * class-qualified extraFrames — re-runs over the full current corpus:
-    * a removed referenced doc must surface as a NEW dangling-ref violation
-    * on an untouched referrer, and those passes are join/agg-shaped
-    * (cheap) rather than span-scan-shaped (expensive).
+    * their prior row-local violations forward (sound because the
+    * row-local pass is a pure function of (spans, schema) and
+    * [[snapshotDiff]] certifies spans unchanged); removed documents' rows
+    * drop. Everything that can SEE OTHER DOCUMENTS — vocabulary/class
+    * distincts, the referential existence join, DocIdUnique, and the
+    * row-local checks' class-qualified extraFrames — re-runs over the full
+    * current corpus: a removed referenced doc must surface as a NEW
+    * dangling-ref violation on an untouched referrer, and those passes are
+    * join/agg-shaped (cheap) rather than span-scan-shaped (expensive).
     *
     * `prevCore` must be the [[rowLocalCore]] of `prevDocs` under the SAME
     * SchemaDef and check configuration (key your persisted cores by
@@ -245,21 +201,20 @@ object Pipeline {
     *
     * Returns (violations, core): `violations` ≡ a from-scratch
     * `violations(cur)` row-for-row (PipelineDeltaSpec), `core` is what to
-    * persist for the NEXT delta. The diff frame is localCheckpoint-
-    * materialized — it is consumed twice (dirty and unchanged slices), and
-    * it is doc_id+status-sized.
-    */
-  /** `precomputedDiff`: an already-materialized
-    * [[snapshotDiffWithCounts]] frame for the SAME (prev, cur) pair —
-    * callers that need the diff twice (the app's delta mode also derives
-    * the profile's touched buckets from it) compute it once instead of
-    * paying the dual-corpus digest scan per consumer.
+    * persist for the NEXT delta; both read one dirty-slice scan. The diff
+    * frame is localCheckpoint-materialized — it is consumed twice (dirty
+    * and unchanged slices), and it is doc_id+status-sized.
+    *
+    * `precomputedDiff`: an already-materialized [[snapshotDiffWithCounts]]
+    * frame for the SAME (prev, cur) pair — callers that need the diff
+    * twice (the app's delta mode also derives the profile's touched
+    * buckets from it) compute it once instead of paying the dual-corpus
+    * digest scan per consumer.
     */
   def violationsDelta(spark: SparkSession, prevDocs: DataFrame,
                       prevCore: DataFrame, curDocs: DataFrame,
                       schema: SchemaDef,
                       checks: Seq[ConstraintCheck] = Checks.all,
-                      native: Boolean = true,
                       precomputedDiff: Option[DataFrame] = None): (DataFrame, DataFrame) = {
     val diffAll = precomputedDiff.getOrElse(
       snapshotDiffWithCounts(prevDocs, curDocs).localCheckpoint())
@@ -279,40 +234,30 @@ object Pipeline {
     val dirty = curDocs.join(
       diff.filter(col("status").isin("added", "changed")).select("doc_id"),
       Seq("doc_id"), "left_semi")
-    val freshCore = rowLocalCore(spark, dirty, schema, checks, native)
+    val freshCore = rowLocalCore(spark, dirty, schema, checks)
     val unchanged = diff.filter(col("status") === "unchanged")
       .select(col("doc_id").cast("string").as("docId"))
     val carried = prevCore.join(unchanged, Seq("docId"), "left_semi")
-    val core = freshCore.unionByName(carried)
+    // checkpointed, not cached: Dataset.union flattens this union-shaped
+    // core into the assembly below, where no cache of the core can match
+    // it — the checkpoint is what lets `violations` and a persisted core
+    // share ONE dirty-slice scan. Lazy: the first action that reads it
+    // validates the slice (AQE runs the join's shuffle stages here).
+    val core = freshCore.unionByName(carried).localCheckpoint(eager = false)
     (violationsFromCore(spark, curDocs, schema, core, checks), core)
   }
 
-  /** Full violations assembled around an ALREADY-COMPUTED (typically
-    * cached or persisted) row-local core: core ∪ the row-local checks'
-    * extraFrames ∪ the corpus checks, all over `docs`. With the core
-    * cached, writing the core AND the violations costs the fused scan
-    * once — the [[ValidatorApp]] flow that makes every full run's core a
-    * free by-product for the NEXT run's [[violationsDelta]].
+  /** Full violations assembled around an ALREADY-COMPUTED row-local core
+    * (the delta's fresh ∪ carried rows): core ∪ the row-local checks'
+    * extraFrames ∪ the corpus checks, all over `docs` — the same assembly
+    * as [[violationsWithCore]], over a shared scan that carries no
+    * violation array (the core is given).
     */
   def violationsFromCore(spark: SparkSession, docs: DataFrame,
                          schema: SchemaDef, core: DataFrame,
                          checks: Seq[ConstraintCheck] = Checks.all): DataFrame = {
-    val ctx0 = CheckContext(spark, docs, schema, None)
-    // the ValidatorApp's full-run and delta flows assemble around a
-    // precomputed core, so the composed corpus checks here get the SAME
-    // shared single-scan treatment as violations() (one wide cached scan
-    // instead of one corpus scan per vocabulary/referential subplan);
-    // same opt-out conf. No __viols column — the core is given.
-    val useShared =
-      spark.conf.getOption("spark.graft.validate.sharedScan").forall(_ != "false")
-    val ctx = if (useShared) ctx0.copy(sharedOpt = Some(ctx0.buildSharedScan(Nil)))
-              else ctx0
-    val (rowLocal, others) = checks.partition(_.isInstanceOf[RowLocalCheck])
-    val extraFrames = rowLocal.flatMap(c =>
-      c.asInstanceOf[RowLocalCheck].extraFrames(ctx)
-        .map(_.withColumn("check", lit(c.id))))
-    val otherFrames = others.map(c => c.run(ctx).withColumn("check", lit(c.id)))
-    (core +: (extraFrames ++ otherFrames)).reduce(_ unionByName _)
+    val ctx = CheckContext(spark, docs, schema, None)
+    assemble(spark, ctx.copy(sharedOpt = Some(ctx.buildSharedScan(Nil))), core, checks)
   }
 
   /** Per-bucket, per-check verdicts (north rule: per-partition pass/fail +

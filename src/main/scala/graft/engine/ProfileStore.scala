@@ -145,16 +145,17 @@ object ProfileStore {
     // name it, THE expected prior snapshot: a mispointed drift.prevProfile
     // otherwise produced a committed profile silently mixing two corpora
     // (round-8 advice, medium; the delta path's prevCore lineage gate is
-    // the model)
+    // the model). A prior profile of a zero-doc snapshot has no rows, so
+    // no snapshotId to check, and carries nothing.
     val prevRows = read(spark, prevOutDir)
     val prevIds = prevRows.select("snapshotId").distinct()
       .limit(3).collect().map(_.getString(0)).toSeq
-    require(prevIds.size == 1,
+    require(prevIds.size <= 1,
       s"prior profile at $prevOutDir carries ${prevIds.size} distinct " +
         s"snapshotIds (${prevIds.mkString(", ")}) — torn or mixed directory")
-    expectPrevSnapshotId.foreach(want => require(prevIds.head == want,
-      s"prior profile at $prevOutDir describes snapshot '${prevIds.head}', " +
-        s"expected '$want' — mispointed drift.prevProfile"))
+    for (want <- expectPrevSnapshotId; have <- prevIds) require(have == want,
+      s"prior profile at $prevOutDir describes snapshot '$have', " +
+        s"expected '$want' — mispointed drift.prevProfile")
     val carried = prevRows.drop("snapshotId")
       .filter(!col("part").isin(touched: _*))
     fresh.map(_.unionByName(carried)).getOrElse(carried)
@@ -212,14 +213,16 @@ object ProfileStore {
   }
 
   /** The LATEST run's profile rows (each enabled run profiles the full
-    * snapshot, so the newest run alone is the current profile).
+    * snapshot, so the newest run alone is the current profile). A
+    * zero-doc snapshot's profile has no rows, and reads as empty.
     */
   def read(spark: SparkSession, outDir: String): DataFrame = {
     val all = spark.read.parquet(s"$outDir/profile")
     // `run` is partition-discovered — its physical type is whatever the
     // directory values fit (int for small ids, long for timestamps)
-    val latest = all.agg(max(col("run")).cast("long")).collect()(0).getLong(0)
-    all.filter(col("run") === latest).drop("run")
+    val latest = all.agg(max(col("run")).cast("long")).collect()(0)
+    all.filter(if (latest.isNullAt(0)) lit(false) else col("run") === latest.getLong(0))
+      .drop("run")
   }
 
   /** The corpus profile folded from the stored per-bucket rows — never
@@ -227,39 +230,6 @@ object ProfileStore {
     */
   def corpusProfile(spark: SparkSession, outDir: String): DataFrame =
     ColumnStats.mergeProfiles(read(spark, outDir).drop("snapshotId"))
-
-  /** [[corpusProfile]] over the MANIFEST-COMMITTED rows ([[readCommitted]])
-    * — the isolation guarantee held at this entry point too (round-8
-    * verdict nit: the listing-based readers saw torn writers). None when
-    * nothing is committed.
-    */
-  def corpusProfileCommitted(spark: SparkSession, m: Manifest,
-                             snapshotId: String, constraintHash: String,
-                             checksHash: String = "",
-                             asOfRun: Long = Long.MaxValue): Option[DataFrame] =
-    readCommitted(spark, m, snapshotId, constraintHash, checksHash, asOfRun)
-      .map(df => ColumnStats.mergeProfiles(df.drop("snapshotId")))
-
-  /** Per-BUCKET drift between two runs' stored profiles
-    * ([[graft.stats.ProfileDrift.byPart]] over the stored rows): localizes
-    * WHICH partition of the corpus moved — the grouped twin of
-    * [[driftReport]], same zero-rescan cost.
-    */
-  def driftReportByBucket(spark: SparkSession, prevOutDir: String,
-                          curOutDir: String): DataFrame =
-    graft.stats.ProfileDrift.byPart(
-      read(spark, prevOutDir).drop("snapshotId"),
-      read(spark, curOutDir).drop("snapshotId"))
-
-  /** [[driftReportByBucket]] over two MANIFEST-COMMITTED profiles. */
-  def driftReportByBucketCommitted(spark: SparkSession,
-                                   prev: (Manifest, String, String, String),
-                                   cur: (Manifest, String, String, String)): Option[DataFrame] =
-    for {
-      p <- readCommitted(spark, prev._1, prev._2, prev._3, prev._4)
-      c <- readCommitted(spark, cur._1, cur._2, cur._3, cur._4)
-    } yield graft.stats.ProfileDrift.byPart(
-      p.drop("snapshotId"), c.drop("snapshotId"))
 
   /** Snapshot-over-snapshot drift from two STORED profiles (no corpus
     * access): per metric column — exact row/null counts both sides, exact
@@ -272,18 +242,6 @@ object ProfileStore {
                   curOutDir: String): DataFrame =
     driftFromCorpusProfiles(spark, corpusProfile(spark, prevOutDir),
       corpusProfile(spark, curOutDir))
-
-  /** [[driftReport]] over two MANIFEST-COMMITTED profiles (isolation at
-    * every drift entry point, round-8 verdict nit). None when either side
-    * has no committed profile.
-    */
-  def driftReportCommitted(spark: SparkSession,
-                           prev: (Manifest, String, String, String),
-                           cur: (Manifest, String, String, String)): Option[DataFrame] =
-    for {
-      p <- corpusProfileCommitted(spark, prev._1, prev._2, prev._3, prev._4)
-      c <- corpusProfileCommitted(spark, cur._1, cur._2, cur._3, cur._4)
-    } yield driftFromCorpusProfiles(spark, p, c)
 
   private def driftFromCorpusProfiles(spark: SparkSession,
                                       prevProfile: DataFrame,

@@ -242,7 +242,7 @@ object ValidatorApp {
     // refs in remaining buckets can point at docs in completed buckets
     val universe = if (isResume) Some(all) else None
 
-    // INCREMENTAL (delta) mode: the fused span scan covers only docs that
+    // INCREMENTAL (delta) mode: the span scan covers only docs that
     // changed since delta.prevDocuments, the prior core carries forward.
     // Mutually exclusive with bucket-resume: resume finishes an
     // interrupted run of ONE snapshot, delta steps BETWEEN snapshots.
@@ -257,8 +257,8 @@ object ValidatorApp {
     var deltaDiff: Option[org.apache.spark.sql.DataFrame] = None
 
     // (violations, core-to-persist): every FULL run's core is a free
-    // by-product (the fused scan is cached once and feeds both writes), so
-    // the NEXT run can validate incrementally against it
+    // by-product (the exploded violation array of the one cached shared
+    // scan), so the NEXT run can validate incrementally against it
     val (violationsRaw, coreOpt) =
       if (isDelta) {
         require(hasRowLocal, "delta mode needs at least one row-local check")
@@ -284,16 +284,11 @@ object ValidatorApp {
         deltaDiff = Some(diffAll)
         val (v, core) = Pipeline.violationsDelta(spark, prev, prevCore, all,
           cfg.schema, checks, precomputedDiff = Some(diffAll))
-        val cachedCore = core.cache()
-        (Pipeline.violationsFromCore(spark, all, cfg.schema, cachedCore, checks)
-          .cache(), Some(cachedCore))
-      } else if (!isResume && hasRowLocal) {
-        val core = Pipeline.rowLocalCore(spark, docs, cfg.schema, checks).cache()
-        (Pipeline.violationsFromCore(spark, docs, cfg.schema, core, checks)
-          .cache(), Some(core))
+        (v.cache(), Some(core))
       } else {
-        (Pipeline.violations(spark, docs, cfg.schema, checks,
-          universe = universe).cache(), None)
+        val (v, core) = Pipeline.violationsWithCore(spark, docs, cfg.schema, checks,
+          universe = universe)
+        (v.cache(), if (!isResume && hasRowLocal) Some(core) else None)
       }
     // dataset-level rows (docId null → bucket -1: vocabulary checks, the
     // -50 warning series, URI-existence) belong to the snapshot, not to a
@@ -311,7 +306,8 @@ object ValidatorApp {
       .write.mode("overwrite").parquet(s"$outDir/violations/$runId") }
 
     // persist the row-local core with its lineage so the NEXT snapshot can
-    // run delta against it (reads from the cache — no second fused scan)
+    // run delta against it (reads the shared-scan cache, or the delta's
+    // checkpointed core — no second span scan)
     stage("core_persist") { coreOpt.foreach(_
       .withColumn("constraintHash", lit(cfg.schema.constraintHash))
       .withColumn("checksHash", lit(cfg.checksHash))
@@ -439,7 +435,6 @@ object ValidatorApp {
       }
     }
     violationsRaw.unpersist()
-    coreOpt.foreach(_.unpersist())
     } finally spark.listenerManager.unregister(metricsAudit)
   }
 }

@@ -47,7 +47,7 @@ final case class ValidatorConfig(
     // with NO exchange (the largest shuffle in the pipeline at 10^12 docs)
     bucketedTable: Option[String] = None,
     // `delta.prevDocuments` + `delta.prevCore`: INCREMENTAL validation —
-    // the fused span scan runs over only the docs that changed since the
+    // the span-validation scan runs over only the docs that changed since the
     // previous snapshot, carrying the prior row-local core forward
     // (Pipeline.violationsDelta). Both must be set together; the prev core
     // must come from a run with the SAME schema + check set (the app

@@ -20,8 +20,9 @@ import graft.validators.ScalaValidators
   * CodegenFallback — interpreted per span, allocation-heavy, and it stops
   * scaling past ~8 local cores (GC pressure). This expression makes one
   * tight pass per row: compiled regex validators, primitive counters, and a
-  * single output array. Semantics are IDENTICAL to the HOF path — asserted
-  * by the golden spec's three-way equality (fused / unfused / native).
+  * single output array. Semantics are IDENTICAL to the HOF path, which
+  * stays as the per-check reference ([[graft.checks.RowLocalCheck.run]]) —
+  * asserted by the golden specs' composed-pass ≡ per-check equality.
   *
   * Output: array<struct<checkId,kind,value,expected,check>> where `check`
   * is the owning check family id (for per-check verdict rollups).

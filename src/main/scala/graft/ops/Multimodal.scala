@@ -4,8 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: image/audio/video as opaque `binary` columns
-  * with typed metadata, plus decode / feature-extract / frame-sample
-  * operators.
+  * with typed metadata, plus decode / frame-sample operators.
   *
   * The actual codec work is STUBBED (this container ships no image/audio
   * libraries): `decodeImage` parses a deterministic fake header instead of
@@ -219,13 +218,6 @@ object Multimodal {
     val start = (length(payload) - frameBytes) * i / (n - 1) + 1
     payload.substr(start.cast("int"), lit(frameBytes))
   }
-
-  /** Feature-extract stub: fixed-width float vector from the payload —
-    * the embedding-shaped output a real feature extractor would produce.
-    */
-  def extractFeatures(payload: Column, dims: Int = 8): Column =
-    transform(sequence(lit(0), lit(dims - 1)), i =>
-      (pmod(xxhash64(payload, i), lit(1000L)).cast("float") / 1000.0f))
 
   /** Partition media by type + size band — the layout a 100 TB media lake
     * wants (decode cost is type- and size-correlated, so batches stay

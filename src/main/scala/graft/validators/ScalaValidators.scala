@@ -129,13 +129,36 @@ object ScalaValidators {
     true
   }
 
+  /** Where a regex `$` lets a match end: before ONE final line terminator
+    * (LF, CR LF, CR, NEL, LS or PS), else at the end — java.util.regex's
+    * default `$`, which Spark's rlike uses (the reference's PCRE `$` too,
+    * for a final LF): "en\n" is a valid language tag to both.
+    */
+  private def lineEnd(s: String): Int = {
+    val n = s.length
+    if (n == 0) 0
+    else s.charAt(n - 1) match {
+      case '\n' => if (n >= 2 && s.charAt(n - 2) == '\r') n - 2 else n - 1
+      case '\r' | '\u0085' | '\u2028' | '\u2029' => n - 1
+      case _ => n
+    }
+  }
+
+  /** The number a regex-accepted integer/decimal lexical form denotes. The
+    * regex admits one final line terminator (see [[lineEnd]]); the Column
+    * twins' `try_cast` then trims "\n"/"\r" but not the Unicode
+    * terminators, exactly as String.trim does — those throw here as the
+    * cast yields null there.
+    */
+  private def num(s: String): BigDecimal = BigDecimal(s.trim)
+
   /** EXACT hand evaluation of LanguageRegex
     * (`^[a-zA-Z]{1,8}(-[a-zA-Z0-9]{1,8})*$`) — full equivalence, no
     * fallback needed (ScalaValidatorParitySpec fuzzes it against the
     * pattern).
     */
   private def languageExact(s: String): Boolean = {
-    val n = s.length
+    val n = lineEnd(s)
     var i = 0
     var first = true
     while (i <= n) {
@@ -202,7 +225,7 @@ object ScalaValidators {
       }
       if (fast != 0) fast == 1
       else integerRx(s) && {
-        try { val v = BigDecimal(s); v >= lo && v <= hi }
+        try { val v = num(s); v >= lo && v <= hi }
         catch { case _: NumberFormatException => false }
       }
     }
@@ -220,7 +243,7 @@ object ScalaValidators {
     var i = i0
     while (i < n && s.charAt(i) >= '0' && s.charAt(i) <= '9') i += 1
     if (i == n && n - i0 >= 1 && n - i0 <= 18) true
-    else integerRx(s) && (try { BigDecimal(s).precision <= 38 }
+    else integerRx(s) && (try { num(s).precision <= 38 }
       catch { case _: NumberFormatException => false })
   }
 
@@ -260,13 +283,13 @@ object ScalaValidators {
       x + "long" -> intInRange(BigDecimal("-9223372036854775808"), BigDecimal("9223372036854775807")),
       x + "Name" -> nameRx,
       x + "NCName" -> ncNameRx,
-      x + "negativeInteger" -> (s => integer(s) && BigDecimal(s) <= -1),
+      x + "negativeInteger" -> (s => integer(s) && num(s) <= -1),
       x + "NMTOKEN" -> nmtokenRx,
-      x + "nonNegativeInteger" -> (s => integer(s) && BigDecimal(s) >= 0),
-      x + "nonPositiveInteger" -> (s => integer(s) && BigDecimal(s) <= 0),
+      x + "nonNegativeInteger" -> (s => integer(s) && num(s) >= 0),
+      x + "nonPositiveInteger" -> (s => integer(s) && num(s) <= 0),
       x + "normalizedString" -> (s => xmlTextFast(s) || xmlTextRx(s)),
       r + "PlainLiteral" -> plainLiteralRx,
-      x + "positiveInteger" -> (s => integer(s) && BigDecimal(s) >= 1),
+      x + "positiveInteger" -> (s => integer(s) && num(s) >= 1),
       x + "short" -> intInRange(-32768, 32767),
       x + "string" -> (s => xmlTextFast(s) || xmlTextRx(s)),
       x + "token" -> (s => xmlTextFast(s) || xmlTextRx(s)),
@@ -309,7 +332,7 @@ object ScalaValidators {
         ok = (fastV >= 0 || decimalRx(s)) && {
           try {
             val v = if (fastV >= 0) java.math.BigDecimal.valueOf(fastV)
-                    else new java.math.BigDecimal(s)
+                    else num(s).bigDecimal
             (f.minInclusive == null || v.compareTo(f.minInclusive) >= 0) &&
               (f.minExclusive == null || v.compareTo(f.minExclusive) > 0) &&
               (f.maxInclusive == null || v.compareTo(f.maxInclusive) <= 0) &&

@@ -5,6 +5,7 @@ import graft.datagen.DocGen
 import graft.engine.Pipeline
 import graft.model.SchemaDef
 import graft.validators.ScalaValidators
+import org.apache.spark.sql.functions.lit
 
 /** The span-level datatype seam: strict-mode asserted-datatype comparison
   * (DATATYPE-...-100 with the Virtuoso coercion whitelist,
@@ -134,18 +135,19 @@ class DatatypeSeamSpec extends SparkTestBase {
       .exists(_._1 == DocGen.docId(i)))
   }
 
-  test("native ≡ HOF ≡ per-check on the annotated corpus, strict and loose") {
-    def sets(checks: Seq[ConstraintCheck], fused: Boolean, native: Boolean) =
-      Pipeline.violations(spark, annotated, schema, checks, fused, native).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getString(2),
-          r.getString(3), r.getString(4), r.getString(6))).toSet
+  test("composed pass == per-check reference, annotated corpus, both modes") {
+    def set(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2),
+        r.getString(3), r.getString(4), r.getString(6))).toSet
     for (checks <- Seq(strictChecks, looseChecks)) {
-      val nat = sets(checks, fused = true, native = true)
-      val hof = sets(checks, fused = true, native = false)
-      val per = sets(checks, fused = false, native = false)
-      assert(nat == hof,
-        s"native vs HOF: missing=${(hof -- nat).take(3)} extra=${(nat -- hof).take(3)}")
-      assert(hof == per)
+      val composed = set(Pipeline.violations(spark, annotated, schema, checks))
+      // the HOF violArray of each row-local check, each check on its own plan
+      val perCheck = set(checks
+        .map(c => c.run(CheckContext(spark, annotated, schema)).withColumn("check", lit(c.id)))
+        .reduce(_ unionByName _))
+      assert(composed == perCheck,
+        s"composed vs per-check: missing=${(perCheck -- composed).take(3)} " +
+          s"extra=${(composed -- perCheck).take(3)}")
     }
   }
 

@@ -170,18 +170,20 @@ class PipelineGoldenSpec extends SparkTestBase {
     assert(actual.keySet.subsetOf(known), s"unexpected: ${actual.keySet -- known}")
   }
 
-  test("native, HOF-fused, and per-check paths produce identical violation sets") {
+  test("composed pass and per-check reference: identical violation sets") {
     val docs = DocGen.documents(spark, 3000L).toDF()
-    def collectSet(fused: Boolean, native: Boolean) =
-      Pipeline.violations(spark, docs, schema, fused = fused, native = native).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getString(2),
-          r.getString(3), r.getString(4), r.getString(6))).toSet
-    val nativeSet = collectSet(fused = true, native = true)
-    val hofSet = collectSet(fused = true, native = false)
-    val perCheck = collectSet(fused = false, native = false)
-    assert(nativeSet == hofSet,
-      s"native vs HOF: missing=${(hofSet -- nativeSet).take(3)} extra=${(nativeSet -- hofSet).take(3)}")
-    assert(hofSet == perCheck)
+    def collectSet(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2),
+        r.getString(3), r.getString(4), r.getString(6))).toSet
+    val composed = collectSet(Pipeline.violations(spark, docs, schema))
+    // each check's own plan over the corpus: the HOF violArray of the
+    // row-local checks (RowLocalCheck.run), per-check scans, no shared cache
+    val perCheck = collectSet(Checks.all
+      .map(c => c.run(CheckContext(spark, docs, schema)).withColumn("check", lit(c.id)))
+      .reduce(_ unionByName _))
+    assert(composed == perCheck,
+      s"composed vs per-check: missing=${(perCheck -- composed).take(3)} " +
+        s"extra=${(composed -- perCheck).take(3)}")
   }
 
   test("verdicts: per-bucket pass/fail with lineage; clean buckets PASS") {

@@ -253,6 +253,34 @@ class ProfileStoreSpec extends SparkTestBase {
     }
   }
 
+  test("delta profile after a zero-doc snapshot: the empty prior profile carries nothing") {
+    val tmp = Files.createTempDirectory("graft-profile-empty").toString
+    val cur = DocGen.documents(spark, 300L).toDF()
+    cur.limit(0).write.mode("overwrite").parquet(s"$tmp/prev")
+    cur.write.mode("overwrite").parquet(s"$tmp/cur")
+    def cfg(docs: String, extra: ValidatorConfig => ValidatorConfig) = extra(ValidatorConfig(
+      documentsPath = s"$tmp/$docs", snapshotId = s"snap-$docs",
+      checkKeys = Seq("datatype", "doc-id-unique"), schema = DocGen.schema,
+      xmlOut = None, jsonOut = None, manifestPath = None, nBuckets = 8,
+      profileEnabled = true))
+    ValidatorApp.run(spark, cfg("prev", identity), s"$tmp/outPrev")
+    val prevCore = new java.io.File(s"$tmp/outPrev/core").listFiles()
+      .filter(_.getName.startsWith("run=")).head.getAbsolutePath
+    ValidatorApp.run(spark, cfg("cur", _.copy(
+      deltaPrevDocuments = Some(s"$tmp/prev"), deltaPrevCore = Some(prevCore),
+      driftPrevProfile = Some(s"$tmp/outPrev"))), s"$tmp/outDelta")
+    ValidatorApp.run(spark, cfg("cur", identity), s"$tmp/outFull")
+
+    // every doc is new: the delta profile is the full profile, exactly
+    val exact = Seq("n", "nulls", "min_d", "max_d", "min_s", "max_s", "sum_l")
+    def keyed(dir: String) = ProfileStore.read(spark, dir)
+      .select(col("part") +: col("column") +: exact.map(col): _*)
+      .collect().map(r => (r.getInt(0), r.getString(1)) -> r.toSeq.drop(2)).toMap
+    assert(keyed(s"$tmp/outDelta") == keyed(s"$tmp/outFull"))
+    // drift against the empty prior profile: no metric on both sides, no rows
+    assert(spark.read.parquet(s"$tmp/outDelta/drift").isEmpty)
+  }
+
   test("drift.prevProfile without profile.enabled is refused") {
     val tmp = Files.createTempDirectory("graft-profile-bad").toString
     DocGen.documents(spark, 100L).toDF()

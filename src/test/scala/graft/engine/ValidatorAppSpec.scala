@@ -3,6 +3,7 @@ package graft.engine
 import graft.SparkTestBase
 import graft.datagen.DocGen
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 class ValidatorAppSpec extends SparkTestBase {
 
@@ -150,6 +151,91 @@ class ValidatorAppSpec extends SparkTestBase {
     val mismatch = f.join(g, Seq("check", "checkId", "docId", "kind", "value"), "full")
       .filter(!(f("count") <=> g("count"))).count()
     assert(mismatch == 0, s"union-of-runs differs from a fresh full run on $mismatch keys")
+  }
+
+  /** Rows read from the `spans` column while `body` runs, per corpus
+    * directory name: every executed parquet scan whose required schema has
+    * `spans`, each node once — AQE stages and cache build plans walked,
+    * since a cache's build plan is shared by every query reading it.
+    */
+  private def spansRowsRead(body: => Unit): Map[String, Long] = {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try body
+    finally {
+      org.apache.spark.sql.graft.shims.waitForListeners(spark)
+      spark.listenerManager.unregister(listener)
+    }
+    val scans = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[FileSourceScanExec, java.lang.Boolean]())
+    def walk(p: SparkPlan): Unit = {
+      p match {
+        case f: FileSourceScanExec if f.requiredSchema.fieldNames.contains("spans") =>
+          scans.add(f)
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case q: QueryStageExec => walk(q.plan)
+        case m: InMemoryTableScanExec => walk(m.relation.cachedPlan)
+        case _ => ()
+      }
+      (p.children ++ p.subqueries).foreach(walk)
+    }
+    plans.forEach(p => walk(p))
+    scans.asScala.toSeq
+      .groupMapReduce(_.relation.location.rootPaths.head.getName)(
+        _.metrics("numOutputRows").value)(_ + _)
+  }
+
+  private val allCheckKeys = Seq("kinds-defined", "classes-defined", "uri-existence",
+    "object-range", "domain", "datatype", "cardinality", "some", "only", "doc-id-unique")
+
+  test("full run reads the corpus spans column once for violations and core") {
+    val tmp = Files.createTempDirectory("graft-onescan").toString
+    val n = 2000L
+    DocGen.documents(spark, n).toDF().write.mode("overwrite").parquet(s"$tmp/docs")
+    val cfg = ValidatorConfig(
+      documentsPath = s"$tmp/docs", snapshotId = "snap-onescan",
+      checkKeys = allCheckKeys, schema = DocGen.schema, xmlOut = None,
+      jsonOut = None, manifestPath = None, nBuckets = 8)
+    val read = spansRowsRead(ValidatorApp.run(spark, cfg, s"$tmp/out"))
+    assert(read == Map("docs" -> n), s"spans rows read per corpus: $read (corpus: $n)")
+    // the core persisted beside the violations is the full run's row-local core
+    val core = spark.read.parquet(new java.io.File(s"$tmp/out/core").listFiles()
+      .filter(_.getName.startsWith("run=")).head.getAbsolutePath)
+      .drop("constraintHash", "checksHash")
+    val expected = Pipeline.rowLocalCore(spark, spark.read.parquet(s"$tmp/docs"),
+      cfg.schema, cfg.configuredChecks)
+    assert(core.exceptAll(expected).isEmpty && expected.exceptAll(core).isEmpty)
+  }
+
+  test("delta run: violations and the persisted core share one dirty-slice scan") {
+    val tmp = Files.createTempDirectory("graft-deltascan").toString
+    val prev = DocGen.documents(spark, 2000L).toDF()
+    prev.write.mode("overwrite").parquet(s"$tmp/prev")
+    // 100 added docs; the other 2000 unchanged
+    prev.unionByName(DocGen.documentsRange(spark, 2000L, 2100L, 2100L).toDF())
+      .write.mode("overwrite").parquet(s"$tmp/cur")
+    def cfg(d: String) = ValidatorConfig(
+      documentsPath = s"$tmp/$d", snapshotId = d, checkKeys = allCheckKeys,
+      schema = DocGen.schema, xmlOut = None, jsonOut = None, manifestPath = None,
+      nBuckets = 8)
+    ValidatorApp.run(spark, cfg("prev"), s"$tmp/o1")
+    val prevCore = new java.io.File(s"$tmp/o1/core").listFiles()
+      .filter(_.getName.startsWith("run=")).head.getAbsolutePath
+    val read = spansRowsRead(ValidatorApp.run(spark, cfg("cur").copy(
+      deltaPrevDocuments = Some(s"$tmp/prev"), deltaPrevCore = Some(prevCore)),
+      s"$tmp/o2"))
+    // cur: the snapshot diff, the dirty slice (a semi-join on the scanned
+    // corpus) and the shared scan of the corpus checks — once each
+    assert(read == Map("prev" -> 2000L, "cur" -> 3 * 2100L),
+      s"spans rows read per corpus: $read")
   }
 
   test("delta mode: app run against the prior snapshot's persisted core equals a full run") {

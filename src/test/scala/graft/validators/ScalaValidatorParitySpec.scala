@@ -1,6 +1,7 @@
 package graft.validators
 
 import graft.SparkTestBase
+import graft.model.FacetDef
 import org.apache.spark.sql.functions.col
 
 /** Cross-check: the JVM-side validators ([[ScalaValidators]], used by the
@@ -30,21 +31,44 @@ class ScalaValidatorParitySpec extends SparkTestBase {
       val len = rnd.nextInt(12)
       (0 until len).map(_ => "0123456789+-.eEazAZ:# @<&".charAt(rnd.nextInt(25))).mkString
     }
-    corpus ++ fuzz
+    // java.util.regex `$` (and so Spark's rlike) also matches before ONE
+    // final line terminator: "en\n", "1\n", "true\r\n", "0FB8\n" ... must
+    // get the regex verdict from the hand-written fast and exact paths too;
+    // two terminators never match
+    val terminated = for {
+      v <- corpus
+      t <- Seq("\n", "\r\n", "\r", "\u2028", "\u2029", "\u0085", "\n\n", "\n\r")
+    } yield v + t
+    corpus ++ fuzz ++ terminated
   }
 
-  test("ScalaValidators == XsdValidators on corpus + fuzz inputs, all datatypes") {
+  private def assertParity(name: String, colFn: org.apache.spark.sql.Column =>
+      org.apache.spark.sql.Column, scalaFn: String => Boolean): Unit = {
     val session = spark
     import session.implicits._
-    val df = samples.toDF("v")
-    XsdValidators.byDatatype.foreach { case (dt, colFn) =>
-      val colResults = df.select(colFn(col("v"))).collect()
-        .map(r => !r.isNullAt(0) && r.getBoolean(0))
-      val scalaFn = ScalaValidators.forDatatype(dt)
-      val scalaResults = samples.map(scalaFn)
-      samples.lazyZip(colResults).lazyZip(scalaResults).foreach { (v, c, s) =>
-        assert(c == s, s"$dt('$v'): column=$c scala=$s")
-      }
+    val colResults = samples.toDF("v").select(colFn(col("v"))).collect()
+      .map(r => !r.isNullAt(0) && r.getBoolean(0))
+    samples.lazyZip(colResults).foreach { (v, c) =>
+      val s = scalaFn(v)
+      assert(c == s, s"$name(${escape(v)}): column=$c scala=$s")
     }
+  }
+
+  private def escape(v: String): String =
+    v.flatMap(c => if (c < ' ' || c > '~') f"\\u${c.toInt}%04x" else c.toString)
+
+  test("ScalaValidators == XsdValidators on corpus + fuzz inputs, all datatypes") {
+    XsdValidators.byDatatype.foreach { case (dt, colFn) =>
+      assertParity(dt, colFn, ScalaValidators.forDatatype(dt))
+    }
+  }
+
+  test("ScalaValidators.facet == XsdValidators.facet, numeric and length facets") {
+    val facets = Seq(
+      graft.datagen.DocGen.schema.facets.head, // dt:score: decimal in [0, 100]
+      FacetDef("dt:bounded", base = graft.model.SchemaDef.XSD + "integer",
+        minExclusive = "-5", maxExclusive = "5000000000"),
+      FacetDef("dt:len", minLength = 2, maxLength = 3))
+    facets.foreach(f => assertParity(f.datatype, XsdValidators.facet(f), ScalaValidators.facet(f)))
   }
 }
